@@ -32,7 +32,6 @@ import org.apache.spark.sql.util.QueryExecutionListener
 object Harness {
   private val TagProp = "perfbench.tag"
   private val Phases = Seq("SparkEntry", "Exec")
-  private val Setups = 3
   // The first half of the warm passes is warm-up: the JIT keeps compiling
   // for several passes after the cold one, and pass times step down when it
   // settles (see README.md, Steady state). The second half is timed.
@@ -119,20 +118,11 @@ object Harness {
   private def mb(bytes: Long): Double = bytes / 1e6
 
   def run(a: Args): Map[String, Any] = {
-    // --- set-up: session build plus the untimed table warm-up, repeated ---
-    var spark: SparkSession = null
-    val setupTimes = (1 to Setups).map { i =>
-      val t0 = System.nanoTime()
-      spark = session()
-      graft.Tables.names.foreach(n => graft.Tables.t(spark, a.fixtures, n).count())
-      val dt = (System.nanoTime() - t0) / 1e9
-      if (i < Setups) {
-        spark.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-      }
-      dt
-    }
+    // --- set-up: session build plus the untimed table warm-up ---
+    val t0 = System.nanoTime()
+    val spark = session()
+    graft.Tables.names.foreach(n => graft.Tables.t(spark, a.fixtures, n).count())
+    val setupTime = (System.nanoTime() - t0) / 1e9
     val sc = spark.sparkContext
     val tracer = if (a.trace) Some(new Tracer(spark)) else None
     val order = a.keys
@@ -205,6 +195,7 @@ object Harness {
     val timedCalls = timed.flatMap(_.calls)
 
     // --- untimed output check: row count and order-insensitive hash ---
+    val c0 = System.nanoTime()
     val outputs = order.map { key =>
       attempted += 1
       key -> (try {
@@ -221,6 +212,7 @@ object Harness {
           None
       })
     }
+    val checkTime = (System.nanoTime() - c0) / 1e9
     a.outputs.foreach { path =>
       val lines = outputs.sortBy(_._1).map { case (k, o) =>
         o.map { case (n, h) => s"$k\t$n\t$h" }.getOrElse(s"$k\tFAILED\t-") }
@@ -229,11 +221,11 @@ object Harness {
     }
 
     // --- state left behind: disk under the store root, live heap ---
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    val pid = ProcessHandle.current().pid()
-    val spillBytes = dirBytes(new java.io.File(tmp, s"graft_io_$pid"))
-    val storeBytes = Option(tmp.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(_.getName.startsWith("graft_")).map(dirBytes).sum
+    // the program's own files only: Spark also unpacks the snappy and lz4
+    // native libraries into java.io.tmpdir
+    val storeLayers = graft.Footprint.storeDirs(a.fixtures).map { case (module, dirs) =>
+      s"$module.mb" -> mb(dirs.map(dirBytes).sum) } +
+      ("Sources.spill_mb" -> mb(graft.Footprint.spillBytes))
     (1 to 3).foreach { _ => System.gc(); Thread.sleep(100) }
     val liveHeap = ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed
 
@@ -243,8 +235,7 @@ object Harness {
       a.ledger.foreach(path => t.writeLedger(path, ledgerKeys, cold.index))
       val names = perPass.flatMap(_.keys).distinct
       names.map(n => n -> median(perPass.map(_.getOrElse(n, 0.0)))).toMap ++
-        Map("jvm.gc_s" -> median(timed.map(_.gc)), "jvm.jit_s" -> median(timed.map(_.jit)),
-          "Sources.spill_mb" -> mb(spillBytes))
+        Map("jvm.gc_s" -> median(timed.map(_.gc)), "jvm.jit_s" -> median(timed.map(_.jit)))
     }.getOrElse(Map.empty)
     spark.stop()
 
@@ -252,18 +243,19 @@ object Harness {
       "gc_s" -> p.gc, "jit_s" -> p.jit, "calls" -> p.calls.length)
     Map(
       "keys" -> order,
-      "setup_runs_s" -> setupTimes,
-      "setup_s" -> median(setupTimes),
+      "setup_s" -> setupTime,
       "cold_s" -> cold.wall,
       "warm_s" -> median(timed.map(_.wall)),
       "call_p90_s" -> percentile(timedCalls, 0.9),
       "call_samples" -> timedCalls.length,
+      "check_s" -> checkTime,
       "warmup_passes" -> warmup,
       "passes" -> (cold +: warm.toSeq).map(passJson),
       "attempted" -> attempted,
       "failures" -> failures.toSeq,
-      "store_mb" -> mb(storeBytes),
+      "store_mb" -> storeLayers.values.sum,
       "live_heap_mb" -> mb(liveHeap),
+      "store_layers" -> storeLayers,
       "layers" -> layers)
   }
 

@@ -32,10 +32,11 @@ WORKLOADS = {
     "scan_compute": [
         "sim_topk_cosine", "mm_audio_features", "text_tfidf_topk",
     ],
-    # Reads against persisted stores (KmvStore, the frozen unigram
-    # TokenizerStore); the cold pass builds them.
+    # Reads against all four persisted stores (KmvStore, the frozen unigram
+    # TokenizerStore, AnnIndex, GraphAnnIndex); the cold pass builds them.
     "index_probe": [
         "kmv_overlap_probe", "text_unigram_encode_frozen",
+        "sim_ann_ivfpq_probe", "sim_ann_graph_probe",
     ],
     # Verbs that publish an artifact on every call (KmvStore compaction,
     # TokenizerStore retrain): mostly construction jobs.
@@ -44,11 +45,12 @@ WORKLOADS = {
     ],
 }
 
-# Persisted-store roots under java.io.tmpdir, by module. AnnIndex and
-# GraphAnnIndex are not listed: no workload runs them (see README.md).
-STORE_MODULES = {
-    "KmvStore": ["graft_kmv_store"],
-    "TokenizerStore": ["graft_bpe_store", "graft_bpeb_store", "graft_uni_store"],
+# Store modules each workload's keys write; a run that leaves one of them
+# empty fails, so a moved store root cannot read as 0 MB unnoticed.
+STORES_WRITTEN = {
+    "scan_compute": [],
+    "index_probe": ["AnnIndex", "GraphAnnIndex", "KmvStore", "TokenizerStore"],
+    "store_write": ["KmvStore", "TokenizerStore"],
 }
 
 END_TO_END = [
@@ -135,17 +137,6 @@ def build(jars):
     return classes
 
 
-def dir_bytes(path):
-    return sum(os.path.getsize(os.path.join(d, f))
-               for d, _, files in os.walk(path) for f in files)
-
-
-def store_layers(store):
-    """Bytes each store module left under the run's store root, in MB."""
-    return {f"{module}.mb": sum(dir_bytes(store / r) for r in roots) / 1e6
-            for module, roots in STORE_MODULES.items()}
-
-
 def run_jvm(args, keys, classes, jars, run_dir):
     store = run_dir / "store"
     local = run_dir / "spark-local"
@@ -183,10 +174,7 @@ def run_jvm(args, keys, classes, jars, run_dir):
     lines = [l for l in out.splitlines() if l.startswith("PERFBENCH_RESULT ")]
     if proc.returncode != 0 or not lines:
         fail(f"harness JVM exited {proc.returncode}; log tail:\n" + tail(log))
-    res = json.loads(lines[-1][len("PERFBENCH_RESULT "):])
-    # after the JVM exits only the persisted stores remain
-    res["layers_store"] = store_layers(store)
-    return res
+    return json.loads(lines[-1][len("PERFBENCH_RESULT "):])
 
 
 def layer_unit(name):
@@ -251,6 +239,8 @@ def main():
         shutil.rmtree(run_dir, ignore_errors=True)
 
     failures = res["failures"]
+    empty_stores = [m for m in STORES_WRITTEN[args.workload]
+                    if res["store_layers"][f"{m}.mb"] <= 0]
     attempted = res["attempted"]
     fail_frac = len(failures) / attempted
     for p in res["passes"]:
@@ -260,16 +250,19 @@ def main():
               f"jvm.gc {p['gc_s']:6.3f} s  jvm.jit {p['jit_s']:6.3f} s  "
               f"calls {p['calls']}")
     print(f"keys (seed order): {','.join(res['keys'])}")
-    print(f"setup runs: {', '.join(f'{s:.3f}' for s in res['setup_runs_s'])} s")
     print(f"call samples: {res['call_samples']}")
+    print(f"check pass: {res['check_s']:.3f} s (untimed)")
     print(f"fail_frac {fail_frac:.4f} ratio ({len(failures)}/{attempted})")
     for f in failures:
         print(f"FAILED {f}")
+    for m in empty_stores:
+        print(f"FAILED {m} (store): nothing written under the module's root")
+    correct = not failures and not empty_stores
 
     end_to_end = {name: {"value": res[name], "unit": unit} for name, unit in END_TO_END}
     metrics = end_to_end
     if args.trace:
-        layers = {**res["layers"], **res["layers_store"]}
+        layers = {**res["layers"], **res["store_layers"]}
         metrics = {name: {"value": layers[name], "unit": layer_unit(name)}
                    for name in sorted(layers)}
         print(f"ledger: {args.ledger}")
@@ -278,9 +271,9 @@ def main():
             print(f"traced {name} {m['value']} {m['unit']}")
     for name, m in metrics.items():
         print(f"{name} {m['value']} {m['unit']}")
-    print(json.dumps({"correct": not failures, "attempted": attempted,
+    print(json.dumps({"correct": correct, "attempted": attempted,
                       "failed": len(failures), "metrics": metrics}))
-    sys.exit(1 if failures else 0)
+    sys.exit(0 if correct else 1)
 
 
 if __name__ == "__main__":
